@@ -1,42 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Shared local session for the dev probes (same config as Bench). */
-private[graft] object DevSpark {
-  def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // InferFiltersFromGenerate duplicates every kernel-array generator
-      // into a Filter below the Generate (size(kernel(..)) > 0 AND ..
-      // IS NOT NULL) that pushdown re-inlines -- the gram/band kernels
-      // then run TWICE per row, and the Generate already skips null/empty
-      // arrays on its own (outer = false). Always a pessimization for
-      // this engine's plans (ProbePlanGate r12), so excluded.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-}
-
 /** Ad-hoc plan/perf probe (dev tool, not part of the driver contract):
   * prints the executed plan and isolated timings for one named query.
   * `Probe --dot <query> [out.dot]` instead renders the executed plan as
-  * graphviz (reference pigpen-viz, viz.clj:28-60).
+  * graphviz (reference pigpen-viz, viz.clj:28-60). For a per-stage
+  * breakdown (plan, codegen, tasks, exchange) of a whole workload use
+  * the benchmark's trace mode: `python3 perfbench/run.py --workload W
+  * --seed N --trace 1`.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--dot")) { dot(args.drop(1)); return }
     val name = args.headOption.getOrElse("q_revenue_by_nation")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = DevSpark.session()
+    val spark = GraftSession.local(GraftSession.cpus(32))
     val qd = graft.queries.Queries.all.find(_.name == name).get
     // warm-up then 3 timed runs
     qd.fn(spark, sfDir).count()
@@ -55,7 +32,7 @@ object Probe {
     val name = args.headOption.getOrElse("q_revenue_by_nation")
     val out = args.lift(1).getOrElse(name + ".dot")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = DevSpark.session()
+    val spark = GraftSession.local(GraftSession.cpus(32))
     val qd = graft.queries.Queries.all.find(_.name == name).get
     val df = qd.fn(spark, sfDir)
     df.count() // execute so AQE settles on the final plan

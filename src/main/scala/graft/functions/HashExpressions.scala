@@ -665,8 +665,11 @@ case class SignatureAgreement(left: Expression, right: Expression)
 
 /** first_agree_pos(a, b): the 1-based position of the FIRST index where
   * two array<long> signatures agree, 0 when none does — value-identical
-  * to `array_position(zip_with(a, b, (x, y) -> x = y), true)` over
-  * equal-length null-free arrays (the band-hash contract; spec-pinned).
+  * to `array_position(zip_with(a, b, (x, y) -> x = y), true)`
+  * (spec-pinned): positions past the shorter array and null slots never
+  * agree, as `null = x` is never true. Band-hash arrays are null-free
+  * (`containsNull = false`), so their generated loop carries no null
+  * checks; arrays read back from a table may declare nullable elements.
   * That composition is the exact-once dedup condition of the LSH bucket
   * join (a pair colliding in k bands keeps only its first-agreeing-band
   * copy), and as a JOIN CONDITION it ran INTERPRETED per collision row:
@@ -692,21 +695,30 @@ case class FirstAgreePos(left: Expression, right: Expression)
     val n = math.min(a.numElements(), b.numElements())
     var i = 0
     while (i < n) {
-      if (a.getLong(i) == b.getLong(i)) return (i + 1).toLong
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
+        return (i + 1).toLong
       i += 1
     }
     0L
+  }
+
+  private def containsNull(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, cn) => cn
+    case _ => false
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
+      val agree = (Seq(left -> a, right -> b).collect {
+        case (e, v) if containsNull(e) => s"!$v.isNullAt($i)"
+      } :+ s"$a.getLong($i) == $b.getLong($i)").mkString(" && ")
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |${ev.value} = 0L;
          |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) { ${ev.value} = $i + 1L; break; }
+         |  if ($agree) { ${ev.value} = $i + 1L; break; }
          |}
        """.stripMargin
     })

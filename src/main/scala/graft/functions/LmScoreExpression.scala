@@ -98,9 +98,9 @@ final class DistilledLmRuntime(uni: Map[String, Long], bi: Map[String, Long],
   * and the round(_, 6) rate replicate the join path's arithmetic
   * (spec-gated equal; the oracle replays the join form in SQL).
   */
-final class OovRuntime(vocab: Array[String]) extends Serializable {
+final class OovRuntime(vocab: Seq[String]) extends Serializable {
   @transient private lazy val set: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String](vocab.length * 2)
+    val s = new java.util.HashSet[String](vocab.size * 2)
     vocab.foreach(s.add)
     s
   }
@@ -129,9 +129,11 @@ final class OovRuntime(vocab: Array[String]) extends Serializable {
 
 /** oov_rate_score(text): the [[OovRuntime]] scan as a codegen expression —
   * struct(n_tokens, n_oov, oov_rate), null for zero-token texts (the rows
-  * the join path's explode never produced).
+  * the join path's explode never produced). The vocabulary is a `Seq`, not
+  * an `Array`, so two instances over equal vocabularies compare equal and
+  * canonicalization and exchange reuse see them as one expression.
   */
-case class OovRateScore(child: Expression, vocab: Array[String])
+case class OovRateScore(child: Expression, vocab: Seq[String])
     extends UnaryExpression {
   override def prettyName: String = "graft_oov_rate_score"
   override def nullable: Boolean = true

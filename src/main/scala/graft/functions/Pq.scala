@@ -514,7 +514,7 @@ object Pq {
     * scored with the exact metric. Refinement fixes ADC's ORDERING
     * errors inside the shortlist — it cannot recover a neighbor the
     * compressed sweep missed entirely, so raise `refine` (or `nProbe`)
-    * to widen the net before trusting a dial (ProbePq measures both).
+    * to widen the net before trusting a dial (ProbePq measured both).
     *
     * Scale shape: the shortlist is |Q|·k·refine (query, neighbor) id
     * pairs — broadcast-sized by construction since queries are the

@@ -144,13 +144,14 @@ object Cdc {
     * ([[dedupAgainst]]) run as compaction, or the bloom gate
     * ([[contaminationBloomColumn]] — bounded at any catalog size).
     */
-  def distillCatalog(catalog: DataFrame, maxEntries: Int = 500000): Array[String] = {
+  def distillCatalog(catalog: DataFrame,
+      maxEntries: Int = Distill.MaxEntries): Array[String] = {
     val distinctFps = catalog.select(col("fp")).distinct()
-    val n = distinctFps.count()
-    require(n <= maxEntries,
-      s"chunk-fp catalog too large to distill: $n > $maxEntries entries — " +
-        "use the join-based dedupAgainst (as compaction) or the bloom gate")
-    distinctFps.collect().map(_.getString(0)).sorted
+    Distill.orRefuse("chunk-fp catalog",
+        "use the join-based dedupAgainst (as compaction) or the bloom gate",
+        maxEntries, distinctFps) {
+      distinctFps.collect().map(_.getString(0)).sorted
+    }
   }
 
   // ---- Bloom-gated chunk contamination: the [[Winnow]] bloom-lane

@@ -74,42 +74,9 @@ object Dedup {
     * PIPELINE — banding, bucket join, first-agreeing-band exact-once
     * filter, full-signature verify — on the oracle-gated path.
     */
-  /** Bloom-prune the full-signature verify joins (guide §3.2, r16):
-    * when ON, the doc-count-sized `sigs` relation is filtered through a
-    * Bloom filter over the surviving candidate-pair ids BEFORE the two
-    * verify joins — at scale those joins otherwise shuffle EVERY
-    * document's numHashes-long signature even though only candidate
-    * docs (the dup mass, typically a small fraction) can match. False
-    * positives only admit extra build rows that the inner join drops, so
-    * the pair set is unchanged (spec-gated, DedupSpec). Cost: the
-    * exact-once pairs are materialized (they gain a second consumer —
-    * the filter build) plus one count and one bloom-build job, which is
-    * why this is OFF by default locally: at bench scale the verify
-    * joins are broadcasts and the extra driver actions would only add
-    * fixed overhead (ProbeMinhash: verify adds ~0 ms at x16). Enable at
-    * cluster scale with SPARK_GRAFT_MINHASH_VERIFY_BLOOM=1 — the
-    * decision is corpus-size-dependent, so it is parameterised rather
-    * than hard-coded to either regime. Ids must be integral (the bloom
-    * probe is mightContainLong); non-integral ids keep the unpruned
-    * joins.
-    */
-  private val VerifyBloomDefault: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_MINHASH_VERIFY_BLOOM", "0") == "1"
-
-  private def bloomPrunedSigs(sigs: DataFrame, pairs: DataFrame): DataFrame = {
-    val ids = pairs.select(col("idA").as("__pid"))
-      .unionAll(pairs.select(col("idB").as("__pid")))
-    val n = math.max(ids.count(), 1L)
-    val bf = ids.stat.bloomFilter("__pid", n, 0.01)
-    val bfB = sigs.sparkSession.sparkContext.broadcast(bf)
-    val might = udf((id: Long) => bfB.value.mightContainLong(id))
-    Materialize.once(sigs.where(might(col("__id"))))
-  }
-
   private[graft] def minhashPairsFromSigs(sigs: DataFrame, bands: Int,
       threshold: Double, bandHash: Column => Column,
-      pairWhere: Option[Column] = None,
-      verifyBloom: Boolean = VerifyBloomDefault): DataFrame = {
+      pairWhere: Option[Column] = None): DataFrame = {
     // Candidate generation carries only (id, band hashes): the banding
     // explode and bucket join shuffle `bands` longs per doc, not the full
     // `numHashes`-long signature. A pair colliding in k bands appears k
@@ -161,21 +128,10 @@ object Dedup {
       .join(withBh.select(col("__id").as("idB"), col("__bh").as("__bhB")), "idB")
       .where(col("__band") === firstAgree - 1)
       .select(col("idA"), col("idB"))
-    // full-signature verify only for surviving candidate pairs; at
-    // cluster scale the verify side is bloom-pruned to candidate docs
-    // first (see bloomPrunedSigs — identical pair set, spec-gated)
-    val integralId = sigs.schema("__id").dataType match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => true
-      case _ => false
-    }
-    val (pairsIn, verifySide) =
-      if (verifyBloom && integralId) {
-        val p = Materialize.once(pairs)
-        (p, bloomPrunedSigs(sigs, p))
-      } else (pairs, sigs)
-    KeepRows.matching(pairsIn
-        .join(verifySide.select(col("__id").as("idA"), col("__sig").as("__sigA")), "idA")
-        .join(verifySide.select(col("__id").as("idB"), col("__sig").as("__sigB")), "idB"),
+    // full-signature verify only for surviving candidate pairs
+    KeepRows.matching(pairs
+        .join(sigs.select(col("__id").as("idA"), col("__sig").as("__sigA")), "idA")
+        .join(sigs.select(col("__id").as("idB"), col("__sig").as("__sigB")), "idB"),
         "est_jaccard",
         graft.functions.HashExpressions.signatureAgreement(col("__sigA"), col("__sigB")),
         _ >= threshold)
@@ -726,13 +682,13 @@ object Dedup {
     * what the 100 TB path does anyway. The LanguageModel.distill
     * contract.
     */
-  def distillGramDf(counts: DataFrame, maxEntries: Int = 500000): Map[Long, Long] = {
-    val n = counts.count()
-    require(n <= maxEntries,
-      s"gram-df catalog has $n entries > maxEntries=$maxEntries — " +
-        "use softWeightsAgainstCounts (join form) at this scale")
-    counts.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
+  def distillGramDf(counts: DataFrame,
+      maxEntries: Int = Distill.MaxEntries): Map[Long, Long] =
+    Distill.orRefuse("gram-df catalog",
+        "use softWeightsAgainstCounts (join form) at this scale",
+        maxEntries, counts) {
+      counts.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
 
   /** Map-side [[softWeightsAgainst]]: one kernel pass + one plan-literal
     * map fold per row — no joins, no shuffle, no state; spec-gated
@@ -1202,7 +1158,7 @@ object Dedup {
     * batch semi-join keys on.
     */
   def distillBenchmarkGrams(benchmark: DataFrame, textCol: String,
-      k: Int = 3, maxEntries: Int = 2000000): Array[Long] = {
+      k: Int = 3, maxEntries: Int = Distill.MaxEntries): Array[Long] = {
     import graft.functions.TextFunctions.tokens
     // short-doc guard in the projection, not a Filter (see gramArrays)
     val pool = benchmark.select(tokens(col(textCol)).as("__t"))
@@ -1210,13 +1166,13 @@ object Dedup {
         graft.functions.HashExpressions.ngramHashesAll(col("__t"), k))
         .otherwise(typedLit(Array.empty[Long]))).as("__gh"))
       .distinct()
-    val n = pool.count()
-    require(n <= maxEntries,
-      s"benchmark gram set too large to distill: $n > $maxEntries entries — " +
-        "run the batch removeContaminationSpans as compaction instead")
-    val arr = pool.collect().map(_.getLong(0))
-    java.util.Arrays.sort(arr)
-    arr
+    Distill.orRefuse("benchmark gram set",
+        "run the batch removeContaminationSpans as compaction instead",
+        maxEntries, pool) {
+      val arr = pool.collect().map(_.getLong(0))
+      java.util.Arrays.sort(arr)
+      arr
+    }
   }
 
   /** Paragraph-level exact dedup — the RefinedWeb/Dolma pipeline stage
@@ -1348,13 +1304,13 @@ object Dedup {
     * belongs in the join form ([[paragraphDedupAgainst]]) or the
     * persistent fingerprint catalog ([[AnnIndex]]).
     */
-  def distillParagraphCatalog(catalog: DataFrame, maxEntries: Int = 500000): Array[String] = {
-    val n = catalog.count()
-    require(n <= maxEntries,
-      s"paragraph catalog too large to distill: $n > $maxEntries entries — " +
-        "use the join-based paragraphDedupAgainst or a persistent fingerprint catalog")
-    catalog.select(col("fp")).collect().map(_.getString(0)).sorted
-  }
+  def distillParagraphCatalog(catalog: DataFrame,
+      maxEntries: Int = Distill.MaxEntries): Array[String] =
+    Distill.orRefuse("paragraph catalog",
+        "use the join-based paragraphDedupAgainst or a persistent fingerprint catalog",
+        maxEntries, catalog) {
+      catalog.select(col("fp")).collect().map(_.getString(0)).sorted
+    }
 
   /** Embedding near-duplicates: cosine ≥ threshold pairs, candidates via
     * random-hyperplane LSH buckets (exact within-bucket verify). At corpus

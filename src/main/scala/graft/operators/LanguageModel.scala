@@ -231,7 +231,7 @@ object LanguageModel {
     * corpus pass.
     */
   def scoreDocsAuto(df: DataFrame, idCol: String, textCol: String,
-      lm: NgramLm, maxEntries: Int = 500000): DataFrame =
+      lm: NgramLm, maxEntries: Int = Distill.MaxEntries): DataFrame =
     distillIfFits(lm, maxEntries) match {
       case Some(d) => scoreDocsDistilled(df, idCol, textCol, d)
       case None => scoreDocs(df, idCol, textCol, lm)
@@ -489,26 +489,25 @@ object LanguageModel {
     * inside `maxEntries`; CCNet itself ships a compact distilled model to
     * its scoring pass rather than joining against raw counts.
     */
-  def distill(lm: NgramLm, maxEntries: Int = 500000): DistilledLm =
-    distillIfFits(lm, maxEntries).getOrElse(throw new IllegalArgumentException(
-      s"LM too large to distill: uni+bi > $maxEntries entries " +
-        "(raise minCount at train time, or score with the join-based scoreDocs)"))
+  def distill(lm: NgramLm, maxEntries: Int = Distill.MaxEntries): DistilledLm =
+    Distill.orRefuse("LM (uni+bi)",
+      "raise minCount at train time, or score with the join-based scoreDocs",
+      maxEntries, lm.unigrams, lm.bigrams)(collectLm(lm))
 
   /** [[distill]]'s size probe without the hard failure: Some(distilled)
     * when uni+bi fits `maxEntries`, None otherwise — the gate behind
     * [[scoreDocsAuto]]'s distilled-vs-join decision.
     */
-  def distillIfFits(lm: NgramLm, maxEntries: Int = 500000): Option[DistilledLm] = {
-    val nUni = lm.unigrams.count()
-    val nBi = lm.bigrams.count()
-    if (nUni + nBi > maxEntries) None
-    else Some(DistilledLm(
-      lm.unigrams.select("word", "c").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap,
-      lm.bigrams.select("w1", "w2", "c").collect()
-        .map(r => r.getString(0) + " " + r.getString(1) -> r.getLong(2)).toMap,
-      lm.totalTokens, lm.vocabSize))
-  }
+  def distillIfFits(lm: NgramLm,
+      maxEntries: Int = Distill.MaxEntries): Option[DistilledLm] =
+    Distill.ifFits(maxEntries, lm.unigrams, lm.bigrams)(collectLm(lm)).toOption
+
+  private def collectLm(lm: NgramLm): DistilledLm = DistilledLm(
+    lm.unigrams.select("word", "c").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap,
+    lm.bigrams.select("w1", "w2", "c").collect()
+      .map(r => r.getString(0) + " " + r.getString(1) -> r.getLong(2)).toMap,
+    lm.totalTokens, lm.vocabSize)
 
   /** Per-row surprisal under a distilled LM: ONE map-side expression —
     * token array fold with plan-literal map lookups, no joins, no

@@ -99,9 +99,9 @@ object Similarity {
     * Defaults are the measured sane point for small/mid corpora
     * (bits=8, probeHamming=3 — what q_ann_lsh runs). RAISE `bits` as the
     * corpus grows (buckets shrink exponentially: target corpus/2^bits ≈
-    * 10³-10⁴ rows per bucket) and re-measure recall on YOUR vectors with
-    * ProbeLsh before trusting any dial at scale — there is no
-    * data-independent good default.
+    * 10³-10⁴ rows per bucket) and re-measure recall on YOUR vectors
+    * against the exact top-k before trusting any dial at scale — there
+    * is no data-independent good default.
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,

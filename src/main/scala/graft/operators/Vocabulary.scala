@@ -62,12 +62,12 @@ object Vocabulary {
     * Spark-vs-DuckDB gap (DuckDB materializes the shared CTE).
     */
   def oovRate(df: DataFrame, idCol: String, textCol: String,
-      minCount: Long, maxDistillEntries: Int = 500000): DataFrame =
+      minCount: Long, maxDistillEntries: Int = Distill.MaxEntries): DataFrame =
     oovAgainstAuto(df, idCol, textCol,
       vocabulary(df, idCol, textCol, minCount), maxDistillEntries)
 
   def oovRateAgainst(df: DataFrame, idCol: String, textCol: String,
-      vocabDf: DataFrame, maxDistillEntries: Int = 500000): DataFrame =
+      vocabDf: DataFrame, maxDistillEntries: Int = Distill.MaxEntries): DataFrame =
     oovAgainstAuto(df, idCol, textCol, vocabDf, maxDistillEntries)
 
   /** Vocabulary-size adaptive scoring (r16, the scoreDocsAuto
@@ -87,16 +87,18 @@ object Vocabulary {
   private def oovAgainstAuto(df: DataFrame, idCol: String, textCol: String,
       vocabDf: DataFrame, maxDistillEntries: Int): DataFrame = {
     val vocab = Materialize.once(vocabDf)
-    if (vocab.count() <= maxDistillEntries) {
-      val words = vocab.select(col("word")).collect().map(_.getString(0))
-      val score = org.apache.spark.sql.GraftBridge.column(
-        graft.functions.OovRateScore(
-          org.apache.spark.sql.GraftBridge.expression(col(textCol)), words))
-      KeepRows.nonNull(df.select(col(idCol), col(textCol)), "__s", score)
-        .select(col(idCol), col("__s.n_tokens").as("n_tokens"),
-          col("__s.n_oov").as("n_oov"), col("__s.oov_rate").as("oov_rate"))
-    } else
-      oovFromTokens(explodeTokens(tokenArrays(df, idCol, textCol)), idCol, vocab)
+    Distill.ifFits(maxDistillEntries, vocab)(
+        vocab.select(col("word")).collect().map(_.getString(0)).toSeq) match {
+      case Right(words) =>
+        val score = org.apache.spark.sql.GraftBridge.column(
+          graft.functions.OovRateScore(
+            org.apache.spark.sql.GraftBridge.expression(col(textCol)), words))
+        KeepRows.nonNull(df.select(col(idCol), col(textCol)), "__s", score)
+          .select(col(idCol), col("__s.n_tokens").as("n_tokens"),
+            col("__s.n_oov").as("n_oov"), col("__s.oov_rate").as("oov_rate"))
+      case Left(_) =>
+        oovFromTokens(explodeTokens(tokenArrays(df, idCol, textCol)), idCol, vocab)
+    }
   }
 
   private def oovFromTokens(tok: DataFrame, idCol: String,

@@ -89,6 +89,50 @@ class HashExpressionsSpec extends AnyFunSuite {
     assert(FirstAgreePos(lit2, lit3).eval(null) == want.head)
   }
 
+  test("firstAgreePos skips null slots: eval == codegen == array_position(zip_with) on nullable arrays") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GenerateUnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val rnd = new scala.util.Random(678)
+    // small value range so nulls sit beside real agreements, and both-null
+    // slots, which a getLong-only loop would read as 0 == 0
+    def arr(n: Int) = Seq.fill(n)(if (rnd.nextInt(3) == 0) None else Some(rnd.nextInt(3).toLong))
+    val rows = Seq(
+      (Seq(None, Some(1L)), Seq(None, Some(1L))),
+      (Seq(None, Some(0L)), Seq(Some(0L), Some(0L))),
+      (Seq(None, None), Seq(None, None)),
+      (Seq.empty[Option[Long]], Seq(Some(1L)))) ++
+      (0 until 200).map(_ => (arr(1 + rnd.nextInt(6)), arr(1 + rnd.nextInt(6))))
+    // repartition keeps ConvertToLocalRelation from folding the plan path
+    val df = rows.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+      .toDF("i", "a", "b").repartition(2)
+    def inRowOrder(c: org.apache.spark.sql.Column) =
+      df.select($"i", c).collect().sortBy(_.getInt(0)).map(_.getLong(1)).toSeq
+    val want = inRowOrder(
+      array_position(zip_with($"a", $"b", (x, y) => x === y), lit(true)))
+    assert(want.contains(2L) && want.contains(0L))
+    assert(inRowOrder(HashExpressions.firstAgreePos($"a", $"b")) == want)
+    val t = ArrayType(LongType, containsNull = true)
+    val expr = FirstAgreePos(BoundReference(0, t, nullable = true),
+      BoundReference(1, t, nullable = true))
+    val codegen = GenerateUnsafeProjection.generate(Seq(expr))
+    val got = rows.map { case (a, b) =>
+      val row = InternalRow(new GenericArrayData(a.map(_.orNull[Any])),
+        new GenericArrayData(b.map(_.orNull[Any])))
+      val evalPos = expr.eval(row)
+      assert(codegen(row).getLong(0) == evalPos, s"eval != codegen on $a, $b")
+      evalPos
+    }
+    assert(got == want)
+    // band-hash arrays declare null-free elements: their loop has no checks
+    val free = ArrayType(LongType, containsNull = false)
+    val code = FirstAgreePos(BoundReference(0, free, nullable = false),
+      BoundReference(1, free, nullable = false)).genCode(new CodegenContext).code.toString
+    assert(!code.contains("isNullAt"), code)
+  }
+
   test("interpreted eval matches codegen result") {
     // force interpreted path by eval'ing the expression directly
     val shingles = Seq("a b c", "b c d", "c d e")

@@ -122,6 +122,20 @@ class SignalOpsSpec extends AnyFunSuite {
     assert(kA == jA && kA.nonEmpty)
   }
 
+  test("OovRateScore compares by structure: equal vocabularies, equal and canonically equal expressions") {
+    // two distills of one vocabulary yield separately built collections;
+    // the expression must still compare equal, or canonicalization and
+    // exchange reuse treat the same scoring column as two different ones
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.types.StringType
+    val text = AttributeReference("text", StringType)()
+    val a = graft.functions.OovRateScore(text, Array("the", "quick").toSeq)
+    val b = graft.functions.OovRateScore(text, Seq("the", "quick"))
+    assert(a == b && a.hashCode == b.hashCode)
+    assert(a.canonicalized == b.canonicalized && a.semanticEquals(b))
+    assert(a != graft.functions.OovRateScore(text, Seq("the")))
+  }
+
   test("oovRateAgainst: reference-vocabulary scoring") {
     val docs = Seq((1L, "alpha beta gamma"), (2L, "alpha nope")).toDF("doc_id", "text")
     val vocab = Seq("alpha", "beta").toDF("word").withColumn("n", lit(99L))
